@@ -46,33 +46,6 @@ def _crc_hashes(strings: list[str], seed: int = 0) -> np.ndarray:
     return _splitmix64(crcs)
 
 
-def minhash_signature_udf(num_perm: int = 126, seed: int = 42) -> Column:
-    """Factory: pandas UDF array<string> shingles → array<long> signature.
-
-    sig_i = min over shingles of (a_i * x + b_i) mod P31, x = hash mod P31 —
-    same family as the SQL variant, numpy-vectorized as one
-    (num_perm × n_shingles) broadcasted matmul per row.
-    """
-    a, b = perm_coeffs(num_perm, seed)
-    A = np.array(a, dtype=np.int64)[:, None]
-    B = np.array(b, dtype=np.int64)[:, None]
-
-    @pandas_udf(ArrayType(LongType()))
-    def mh(shingles: pd.Series) -> pd.Series:
-        out = []
-        empty = ((B.ravel()) % P31).tolist()  # deterministic filler for empty rows
-        for lst in shingles:
-            if lst is None or len(lst) == 0:
-                out.append(empty)
-                continue
-            x = (_crc_hashes(list(lst)).astype(np.int64) & np.int64(0x7FFFFFFF)) % P31
-            sig = ((A * x[None, :] + B) % P31).min(axis=1)
-            out.append(sig.tolist())
-        return pd.Series(out)
-
-    return mh
-
-
 def caption_signature_udf(shingle_k: int, num_perm: int, bands: int,
                           rows: int, seed: int = 42) -> Column:
     """Factory: ONE fused pandas UDF caption → struct(shingles, bands).

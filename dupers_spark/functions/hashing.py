@@ -43,17 +43,6 @@ def word_shingles(col: Column, k: int = 3) -> Column:
     return F.array_distinct(shingled)
 
 
-def char_shingles(col: Column, k: int = 5) -> Column:
-    """Distinct character k-shingles (for captions without word structure)."""
-    n = F.length(col)
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(n - F.lit(k - 1), F.lit(1))),
-            lambda i: col.substr(i, F.lit(k)),
-        )
-    )
-
-
 def hashed_shingles(shingles: Column) -> Column:
     """shingle strings → int64 in [0, P31): xxhash64 then pmod."""
     return F.transform(shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(P31)))
@@ -175,14 +164,4 @@ def poly_hash(col: Column, mod: int = 1_000_000_007) -> Column:
         F.sequence(F.lit(1), F.greatest(F.length(col), F.lit(1))),
         F.lit(0).cast("long"),
         lambda acc, i: F.pmod(acc * 31 + F.ascii(col.substr(i, F.lit(1))), F.lit(mod)),
-    )
-
-
-def poly_hash_sql(expr: str, mod: int = 1_000_000_007) -> str:
-    """The DuckDB twin of :func:`poly_hash` (for oracle_sql strings)."""
-    return (
-        f"list_reduce(list_prepend(CAST(0 AS BIGINT), "
-        f"[CAST(ascii(substring({expr}, i, 1)) AS BIGINT) "
-        f"for i in range(1, greatest(length({expr}), 1) + 1)]), "
-        f"(acc, c) -> (acc * 31 + c) % {mod})"
     )

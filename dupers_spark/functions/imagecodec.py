@@ -129,7 +129,6 @@ def decode_jpg(data: bytes) -> np.ndarray:
 
 _ENCODERS = {"png": encode_png, "bmp": encode_bmp, "jpg": encode_jpg}
 _DECODERS = {"png": decode_png, "bmp": decode_bmp, "jpg": decode_jpg}
-LOSSY_FMTS = {"jpg"}
 
 
 def encode_image(px: np.ndarray, fmt: str) -> bytes:

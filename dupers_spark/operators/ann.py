@@ -135,22 +135,6 @@ def hyperplanes(dim: int, n_planes: int = 16, seed: int = 42) -> list[list[float
     return rng.standard_normal((n_planes, dim)).tolist()
 
 
-def srp_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-random-projection bucket id: bit_j = (vec · plane_j) > 0.
-
-    HOF/literal-array form — kept ONLY as the portable oracle twin; the
-    production path is fasthash.srp_table_keys_udf (one matmul per Arrow
-    batch; this form embeds n_planes·dim plan literals and evaluates
-    interpreted per-row at embedding dims).
-    """
-    val: Column = F.lit(0)
-    for j, plane in enumerate(planes):
-        lit_plane = F.array(*[F.lit(float(x)) for x in plane])
-        bit = F.when(_dot(vec, lit_plane) > 0, F.lit(1 << j)).otherwise(F.lit(0))
-        val = val.bitwiseOR(bit)
-    return val
-
-
 def lsh_topk(corpus: DataFrame, probes: DataFrame, k: int = 5, dim: int = 64,
              n_planes: int = 16, seed: int = 42, multiprobe_bits: int = 2,
              id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:

@@ -24,6 +24,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+# contracted-graph edge count up to which incremental_components_delta
+# labels the append batch with a driver-side union-find
+DRIVER_CC_MAX_EDGES = 1_000_000
+
 
 def _large_star(edges: DataFrame, num_partitions: int | None = None) -> DataFrame:
     """Γ(u) built from both edge directions; emit (v, m) for v > u.
@@ -216,8 +220,6 @@ def incremental_components_delta(
     defeats incrementality at 10^12 rows). Requires batch ids disjoint
     from corpus ids (append semantics, enforced upstream by the pipeline).
     """
-    import os
-
     edges = new_edges.select(F.col(a).alias("a"), F.col(b).alias("b"))
     ep = edges.select(F.col("a").alias(id_col)).unionByName(
         edges.select(F.col("b").alias(id_col))).distinct().localCheckpoint()
@@ -243,9 +245,7 @@ def incremental_components_delta(
     # barriers). The threshold keeps the distributed loop for pathological
     # batches; labels are identical either way (min member id — string min
     # matches Spark's F.min on strings).
-    max_driver = int(os.environ.get("SPARK_GRAFT_DRIVER_CC_MAX_EDGES",
-                                    str(1_000_000)))
-    if ce.count() <= max_driver:
+    if ce.count() <= DRIVER_CC_MAX_EDGES:
         contracted = _driver_components(ce, id_col)
     else:
         contracted = connected_components(ce).localCheckpoint()  # O(batch)

@@ -13,7 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from dupers_spark.functions import hashing as H
-from dupers_spark.operators import minhash_lsh as ml
 
 
 def exact_dup_groups(df: DataFrame, id_col: str = "doc_id",
@@ -107,19 +106,6 @@ def minhash_rows_poly(df: DataFrame, num_perm: int = 16, k: int = 3, seed: int =
     return df.select(F.col(id_col).alias("id"), F.explode(sig).alias("s")).select(
         "id", F.col("s.perm").alias("perm"), F.col("s.minhash").alias("minhash")
     )
-
-
-def text_near_dup_components(df: DataFrame, cfg: ml.LSHConfig | None = None,
-                             id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Full near-dup clustering of a text table (production xxhash64 path)."""
-    from dupers_spark.operators.components import connected_components
-
-    cfg = cfg or ml.LSHConfig()
-    edges, _verified, _dropped = ml.near_dup_edges(
-        df.select(F.col(id_col).alias("image_id"), F.col(text_col).alias("caption")),
-        cfg,
-    )
-    return connected_components(edges)
 
 
 def simhash_table(df: DataFrame, id_col: str = "doc_id",

@@ -180,14 +180,6 @@ def is_executable_id(id_col: Column | str = "image_id") -> Column:
     return F.lower(c).rlike(r"\.(com|exe)$")
 
 
-def parent_dir(id_col: Column | str = "image_id") -> Column:
-    """Everything before the last '/' ('' for top-level ids)."""
-    c = F.col(id_col) if isinstance(id_col, str) else id_col
-    return F.when(
-        c.contains("/"), F.regexp_replace(c, "/[^/]*$", "")
-    ).otherwise(F.lit(""))
-
-
 def top_segment(id_col: Column | str = "image_id") -> Column:
     """First path segment ('' for ids with no '/') — the unit delDirsExcept
     iterates over (os.ReadDir of the source root, dupe.go:344-353)."""

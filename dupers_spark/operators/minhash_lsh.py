@@ -94,13 +94,6 @@ def star_edges(df: DataFrame, grouped: DataFrame, id_col: str = "image_id",
     )
 
 
-def collapse_exact(df: DataFrame, id_col: str = "image_id",
-                   text_col: str = "caption") -> tuple[DataFrame, DataFrame]:
-    """→ (reps(rep_id, caption), star_edges(a=member, b=rep))."""
-    grouped = collapse_groups(df, id_col, text_col)
-    return grouped.select("rep_id", "caption"), star_edges(df, grouped, id_col, text_col)
-
-
 def signatures(reps: DataFrame, cfg: LSHConfig = LSHConfig(),
                keep: tuple[str, ...] = ()) -> DataFrame:
     """reps(rep_id, caption) → (rep_id, shingles, bands array<long>[, keep]).
@@ -504,6 +497,9 @@ def candidate_pairs(buckets: DataFrame, cfg: LSHConfig = LSHConfig()) -> tuple[D
 # default to 64, which is exactly what they were built with.
 KB_PARTITIONS = 64
 _PARTITION_CAP = 1 << 20
+# index size below which an append probe skips the kb-prune collect job
+# (see prune_index_by_kb)
+KB_PRUNE_MIN_BYTES = 1 << 30
 
 
 def derive_kb_partitions(n_bucket_rows: int,
@@ -586,8 +582,7 @@ def prune_index_by_kb(index_buckets: DataFrame, new_buckets: DataFrame,
     barriers), so the prune is skipped when the index's file listing
     (driver-side, no job) totals less — the broadcast (band, key) probe
     already filters rows either way. 0 = always prune (the plan-gate
-    default); incremental_bucket_pairs passes a 1 GiB default, overridable
-    via $SPARK_GRAFT_KB_PRUNE_MIN_BYTES for cluster tuning.
+    default); incremental_bucket_pairs passes KB_PRUNE_MIN_BYTES (1 GiB).
     """
     if "kb" not in index_buckets.columns:
         return index_buckets
@@ -637,14 +632,10 @@ def incremental_bucket_pairs(index_buckets: DataFrame, new_buckets: DataFrame,
     materialize=True to eagerly checkpoint the kernel output when
     pairs/dropped have several consumers.
     """
-    import os
-
     cols = ["band", "key", "rep_id"] + (["sig"] if radius is not None else [])
     touched = new_buckets.select("band", "key").distinct()
-    min_bytes = int(os.environ.get("SPARK_GRAFT_KB_PRUNE_MIN_BYTES",
-                                   str(1 << 30)))
     old_touched = prune_index_by_kb(index_buckets, new_buckets,
-                                    min_index_bytes=min_bytes) \
+                                    min_index_bytes=KB_PRUNE_MIN_BYTES) \
         .select(*cols).join(F.broadcast(touched), ["band", "key"])
     combined = old_touched.withColumn("is_new", F.lit(False)).unionByName(
         new_buckets.select(*cols).withColumn("is_new", F.lit(True)))

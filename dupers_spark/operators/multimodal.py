@@ -32,7 +32,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from dupers_spark.functions.imagecodec import (
-    LOSSY_FMTS,
     average_phash,
     decode_image,
     psnr,
@@ -193,10 +192,6 @@ def pair_psnr(pairs: DataFrame, images: DataFrame,
             yield pd.DataFrame(out, columns=["a", "b", "psnr_db", "pixels_comparable"])
 
     return joined.mapInPandas(compare, schema=PSNR_SCHEMA)
-
-
-def is_lossy(fmt_col) -> F.Column:
-    return F.col(fmt_col).isin(*sorted(LOSSY_FMTS))
 
 
 # ------------------------------------------------- audio (real WAV) / video

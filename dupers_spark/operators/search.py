@@ -44,6 +44,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 SEP = "\x00"  # cannot occur in captions
+# index size below which query_suffix_index skips trigram routing
+SA_ROUTE_MIN_BYTES = 1 << 30
 
 
 # ----------------------------------------------------------- scan baselines
@@ -371,19 +373,16 @@ def query_suffix_index(index: DataFrame, term: str,
     the barrier (measured at sf0.1: fan-out 0.36-0.55 s vs routed
     0.66-0.82 s across all three round-6 windows) and routing is bypassed
     — decided from the scan's file listing, driver-side, no job. None
-    reads $SPARK_GRAFT_SA_ROUTE_MIN_BYTES (default 1 GiB: at a ~TB-scale
-    index the routed scan saves seconds per query, far above the
-    barrier). When the index is not a plain file scan (cached/derived
+    means SA_ROUTE_MIN_BYTES (1 GiB: at a ~TB-scale index the routed scan
+    saves seconds per query, far above the barrier). When the index is
+    not a plain file scan (cached/derived
     frame) its size is unknown and routing proceeds as before.
     """
     if prune:
-        import os
-
         from dupers_spark.operators.minhash_lsh import index_scan_bytes
 
         if route_min_bytes is None:
-            route_min_bytes = int(os.environ.get(
-                "SPARK_GRAFT_SA_ROUTE_MIN_BYTES", str(1 << 30)))
+            route_min_bytes = SA_ROUTE_MIN_BYTES
         total = index_scan_bytes(index) if route_min_bytes else None
         if total is not None and total < route_min_bytes:
             prune = False  # fan-out beats the routing barrier at this size

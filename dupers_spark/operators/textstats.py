@@ -32,10 +32,6 @@ def tokens(col: Column) -> Column:
     )
 
 
-def token_count(col: Column) -> Column:
-    return F.size(tokens(col))
-
-
 def add_token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """(…, n_tokens, n_chars2, avg_token_len) — BPE-ish subword estimate is
     n_chars/4 (the common ~4-chars-per-token heuristic), rounded down.

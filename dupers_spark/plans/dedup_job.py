@@ -1,34 +1,23 @@
-"""In-memory dedup job with CONCURRENT branch materialization.
+"""In-memory dedup job: the three edge families — exact SHA-256, caption
+MinHash/LSH, perceptual Hamming — built from the operators directly, with
+no stage tables, as concurrent branches through the pipeline's branch
+runner (plans/pipeline.run_branches). The production DedupPipeline builds
+the same families through its persisted stages; tests hold the two to the
+same assignment.
 
-The three edge families — exact SHA-256, caption MinHash/LSH, perceptual
-Hamming — are independent DAG branches, but each one internally pays serial
-barriers (collapse checkpoint, signature checkpoint, pair-gen shuffle).
-Materializing them one after another leaves task slots idle during every
-barrier; that serial fraction is exactly what capped the measured N→4N
-scaling efficiency at 0.42 in round 1 (Amdahl: barrier seconds don't shrink
-with cores).
-
-Fix: drive each branch from its own Python thread against the shared
-SparkSession. Spark's scheduler interleaves the resulting jobs, so one
-branch's shuffle barrier overlaps another branch's compute. On a real
-cluster the same effect comes from submitting the stage writes of an
-Iceberg pipeline concurrently; thread-per-branch is the local-mode
-equivalent (py4j and the DAG scheduler are thread-safe by design — this is
-the documented multi-job submission pattern, not a workaround).
-
-Each branch still ends in an eager localCheckpoint: the edge frames are
+Each branch ends in an eager localCheckpoint: the edge frames are
 consumed by connected components AND by metrics counts, and Spark 4's AQE
 recomputes lazily-persisted frames consumed from concurrent stages.
 """
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F
 
 from dupers_spark.operators import exact, minhash_lsh as ml, simhash as sh
-from dupers_spark.operators.components import connected_components, with_singletons
+from dupers_spark.plans.pipeline import run_branches
 
 
 def dedup_edges_concurrent(
@@ -71,27 +60,6 @@ def dedup_edges_concurrent(
         edges, _v, _d = sh.phash_near_dup_edges(feats, phash_radius)
         return edges.localCheckpoint()
 
-    with ThreadPoolExecutor(3) as ex:
-        futures = [ex.submit(b) for b in (exact_branch, lsh_branch, phash_branch)]
-        frames = [f.result() for f in futures]
-
-    edges = frames[0]
-    for e in frames[1:]:
-        edges = edges.unionByName(e)
-    return edges
-
-
-def dedup_cluster_assign(
-    images: DataFrame,
-    lsh_cfg: ml.LSHConfig | None = None,
-    phash_radius: int = 3,
-    recompute_phash: bool = False,
-    singletons: bool = True,
-) -> DataFrame:
-    """Full in-memory dedup: concurrent edges → connected components
-    (→ + self-labeled singletons). Returns (image_id, component_id)."""
-    edges = dedup_edges_concurrent(images, lsh_cfg, phash_radius, recompute_phash)
-    assign = connected_components(edges)
-    if singletons:
-        assign = with_singletons(assign, images.select("image_id"))
-    return assign
+    frames = run_branches(images.sparkSession, {
+        "exact": exact_branch, "lsh": lsh_branch, "phash": phash_branch})
+    return reduce(DataFrame.unionByName, frames.values())

@@ -4,7 +4,8 @@ Stages (each materialized as a parquet stage table under the warehouse dir;
 Iceberg would swap in transparently since every write goes through
 ``_write_stage``):
 
-  signatures   — exact sha256 + phash per image (zero-byte rows excluded)
+  signatures   — exact sha256 + phash per image (zero-byte payloads are
+                 indexed under sha256(''); only NULL payloads are dropped)
   exact_edges  — byte-identical pair edges (star-collapsed)
   lsh_sigs     — caption near-dup INDEX: rep per distinct caption + minhash
                  signature/bands (probed and appended by run_incremental)
@@ -40,6 +41,10 @@ mirroring dupers' incremental `up` semantics (dupe.go:941-966) at stage
 granularity. run_incremental() extends that to APPEND batches: new rows
 probe the persisted index stages and append to them, reclustering without
 ever recomputing the corpus.
+
+Edge families (exact sha256, caption LSH, video/audio LSH, phash) are
+declared once below — stages, full build, append probe — and both run()
+and run_incremental() drive them as concurrent branches (run_branches).
 """
 
 from __future__ import annotations
@@ -48,7 +53,9 @@ import hashlib
 import json
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict, dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -404,6 +411,207 @@ def _maintain_locked(spark, warehouse, file_factor, sa_factor,
     return records
 
 
+def run_branches(spark: SparkSession, branches: dict) -> dict:
+    """Run independent DAG branches — named zero-argument callables — from
+    a thread pool of width min(#branches, defaultParallelism) → {name:
+    result}.
+
+    Each branch pays serial barriers of its own (collapse checkpoint,
+    signature checkpoint, pair-gen shuffle, stage write); driven one after
+    another they leave task slots idle during every barrier. Submitted
+    from separate Python threads against the shared SparkSession, their
+    jobs interleave in Spark's scheduler, so one branch's barrier overlaps
+    another's compute (py4j and the DAG scheduler are thread-safe — the
+    documented multi-job submission pattern). Every branch runs to
+    completion before a failure propagates.
+    """
+    width = min(len(branches), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(width) as pool:
+        futs = {name: pool.submit(fn) for name, fn in branches.items()}
+        return {name: f.result() for name, f in futs.items()}
+
+
+# ------------------------------------------------------------ edge families
+# Each family declares the stages it owns as (name, partition columns) — in
+# the order appends and '+append' lineage rows follow, its ``edges`` stage
+# last — plus build(pipe, frame), which writes every stage of a full build
+# and returns the edge stage, and probe(pipe, batch), which returns (edges,
+# {stage: rows to append} for the other stages, dropped buckets or None)
+# for an append batch. ``source`` names the input frame the family reads:
+# "images" (the signature frame) or a media corpus. Families with a
+# kb-partitioned bucket index name it ``buckets`` and the ``index`` stage
+# it is derived from (a missing one is backfilled). ``key`` prefixes the
+# family's metrics stage names (inc_<key>_edges, <key>_dropped_buckets).
+
+
+class _ExactFamily:
+    """Byte-identical sha256 pair edges (star-collapsed)."""
+
+    key, source, edges = "exact", "images", "exact_edges"
+    stages = ((edges, None),)
+    index = buckets = None
+
+    def build(self, pipe, sigs: DataFrame) -> DataFrame:
+        return pipe._stage(
+            self.edges,
+            lambda: exact.dup_edges(sigs.select("image_id", "sha256")))
+
+    def probe(self, pipe, bsigs: DataFrame):
+        # within-batch star edges + batch digests broadcast-probed against
+        # the signatures stage (scan + broadcast semi-join, no corpus
+        # shuffle)
+        b_ex = bsigs.select("image_id", "sha256")
+        matched_old = pipe._read_stage("signatures") \
+            .select("image_id", "sha256").join(
+                F.broadcast(b_ex.select("sha256").distinct()), "sha256",
+                "leftsemi")
+        old_ex = matched_old.groupBy("sha256").agg(
+            F.min("image_id").alias("exemplar"))
+        cross = b_ex.join(F.broadcast(old_ex), "sha256").select(
+            F.col("image_id").alias("a"), F.col("exemplar").alias("b"))
+        return exact.dup_edges(b_ex).unionByName(cross), {}, None
+
+
+class _LSHFamily:
+    """MinHash/LSH index family over an (id, caption) token frame:
+    signature stage, kb-partitioned band-bucket stage, verified edges.
+    prefix '' is the caption engine (legacy stage names, tokens are the
+    signature frame's captions); 'video_'/'audio_' are the media
+    modalities — identical machinery, identical resume/append contract,
+    with the decoded token table as a stage of its own because the decode
+    is the expensive part (resumes and appends never re-decode)."""
+
+    def __init__(self, prefix: str, source: str, lshcfg: ml.LSHConfig,
+                 id_col: str, tokens=None):
+        self.key, self.source = f"{prefix}lsh", source
+        self.edges = f"{prefix}lsh_edges"
+        self.lshcfg, self.id_col, self.tokens = lshcfg, id_col, tokens
+        self.index, self.buckets = f"{prefix}lsh_sigs", f"{prefix}lsh_buckets"
+        self.token_stage = f"{prefix}tokens" if tokens else None
+        self.stages = (((self.token_stage, None),) if tokens else ()) + (
+            (self.index, None), (self.buckets, ["kb"]), (self.edges, None))
+
+    def bucket_rows(self, pipe, sigs: DataFrame,
+                    append: bool = False) -> DataFrame:
+        return pipe._bucket_frame(self.buckets,
+                                  ml.band_buckets(sigs, self.lshcfg),
+                                  self.lshcfg.bands, append)
+
+    def build(self, pipe, frame: DataFrame) -> DataFrame:
+        lshcfg, id_col = self.lshcfg, self.id_col
+        if self.tokens is None:
+            tokens = frame.select(id_col, "caption")
+        else:
+            tokens = pipe._stage(self.token_stage,
+                                 lambda: self.tokens(frame))
+
+        def build_sigs():
+            # core-proportional repartition before the Arrow signature
+            # kernel (AQE coalesces the tiny collapse shuffle and the
+            # kernel would inherit ~4 tasks); eager checkpoint because
+            # grouped feeds both the kernel and the token join-back
+            par = tokens.sparkSession.sparkContext.defaultParallelism * 2
+            grouped = ml.collapse_groups(tokens, id_col).repartition(par) \
+                .localCheckpoint()
+            s = ml.signatures(grouped.select("rep_id", "caption"), lshcfg)
+            return s.join(grouped, "rep_id")  # + caption (star join key)
+
+        sigs = pipe._stage(self.index, build_sigs)
+        buckets = pipe._stage(self.buckets,
+                              lambda: self.bucket_rows(pipe, sigs),
+                              partition_by=["kb"])
+
+        def build_edges():
+            star = ml.star_edges(tokens, sigs.select("rep_id", "caption"),
+                                 id_col)
+            pairs, dropped = ml.candidate_pairs(buckets, lshcfg)
+            verified = ml.verify_pairs(pairs, sigs, lshcfg)
+            pipe.metrics.append({"stage": f"{self.key}_dropped_buckets",
+                                 "rows": dropped.count(), "seconds": 0.0})
+            return star.unionByName(verified.select("a", "b"))
+
+        return pipe._stage(self.edges, build_edges)
+
+    def probe(self, pipe, batch: DataFrame):
+        rows = {}
+        if self.tokens is None:
+            tokens = batch.select(self.id_col, "caption")
+        else:
+            # decode/checkpoint INSIDE the branch thread so the token
+            # decode overlaps the other branches
+            tokens = rows[self.token_stage] = \
+                self.tokens(batch).localCheckpoint()
+        index = pipe._read_stage(self.index)
+        # probe the PERSISTED band-bucket stage (kb-pruned skinny scan) —
+        # the signature stage is only touched for verify participants
+        edges, _ver, dropped, sigs_new = ml.incremental_near_dup_edges(
+            index.select("rep_id", "shingles", "bands"), tokens,
+            self.lshcfg, id_col=self.id_col,
+            index_buckets=pipe._read_stage(self.buckets))
+        # sigs_new is checkpointed and carries caption — the append rows
+        # are pure projections, no extra jobs
+        rows[self.index] = sigs_new.select(*index.columns)
+        rows[self.buckets] = self.bucket_rows(pipe, sigs_new, append=True)
+        return edges, rows, dropped
+
+
+class _PHashFamily:
+    """Perceptual Hamming-ball edges: one rep per distinct 64-bit sig, the
+    pigeonhole block index at rest (lsh_buckets analogue; carries sig so
+    the Hamming-refinement kernel works on the probe path), verified
+    edges + collapse stars."""
+
+    key, source, edges = "phash", "images", "phash_edges"
+    index, buckets = "phash_reps", "phash_blocks"
+    stages = ((index, None), (buckets, ["kb"]), (edges, None))
+
+    def __init__(self, radius: int):
+        self.radius = radius
+
+    def bucket_rows(self, pipe, reps: DataFrame,
+                    append: bool = False) -> DataFrame:
+        return pipe._bucket_frame(self.buckets,
+                                  sh.sig_blocks(reps, self.radius),
+                                  self.radius + 1, append)
+
+    def build(self, pipe, sigs: DataFrame) -> DataFrame:
+        pimg = sigs.select("image_id", "phash").filter(
+            F.col("phash").isNotNull())
+        reps = pipe._stage(
+            self.index,
+            lambda: sh.collapse_sig_groups(pimg).select("rep_id", "sig"))
+        blocks = pipe._stage(self.buckets,
+                             lambda: self.bucket_rows(pipe, reps),
+                             partition_by=["kb"])
+
+        def build_edges():
+            cands, dropped = sh.hamming_candidates(reps, self.radius,
+                                                   blocks=blocks)
+            verified = sh.verify_hamming(cands, reps, self.radius)
+            pipe.metrics.append({"stage": f"{self.key}_dropped_buckets",
+                                 "rows": dropped.count(), "seconds": 0.0})
+            return sh.star_edges(pimg, reps).unionByName(
+                verified.select("a", "b"))
+
+        return pipe._stage(self.edges, build_edges)
+
+    def probe(self, pipe, bsigs: DataFrame):
+        pimg = bsigs.select("image_id", "phash").filter(
+            F.col("phash").isNotNull())
+        edges, _ver, dropped, reps_new = sh.incremental_hamming_edges(
+            pipe._read_stage(self.index), pimg, self.radius,
+            index_blocks=pipe._read_stage(self.buckets))
+        # reps_new is a projection of the probe's checkpointed collapse
+        # frame — append rows need no extra jobs
+        return edges, {
+            self.index: reps_new.select("rep_id", "sig"),
+            self.buckets: self.bucket_rows(pipe, reps_new, append=True),
+        }, dropped
+
+
+_MEDIA = {"video": "a videos frame", "audio": "an audio frame"}
+
+
 class DedupPipeline:
     def __init__(self, spark: SparkSession, cfg: PipelineConfig):
         from dupers_spark.sources.storage import StageStore
@@ -416,6 +624,30 @@ class DedupPipeline:
         # Iceberg when the runtime has it, parquet-dir fallback otherwise —
         # identical overwrite/partition semantics either way (storage.py)
         self.store = StageStore(spark, cfg.warehouse)
+
+    def _families(self) -> list:
+        """The enabled edge families in union order — the one place the
+        cfg.use_* flags are read."""
+        cfg = self.cfg
+        fams: list = [_ExactFamily()]
+        if cfg.use_captions:
+            fams.append(_LSHFamily("", "images", cfg.lsh, "image_id"))
+        if cfg.use_video:
+            from dupers_spark.operators import video as vo
+
+            fams.append(_LSHFamily(
+                "video_", "video", cfg.media_lsh, "media_id",
+                lambda v: vo.video_token_table(v, cfg.video_every_n)))
+        if cfg.use_audio:
+            from dupers_spark.operators import audio as ao
+
+            fams.append(_LSHFamily(
+                "audio_", "audio", cfg.media_lsh, "media_id",
+                lambda a: ao.audio_token_table(a, cfg.audio_win,
+                                               cfg.audio_bands)))
+        if cfg.use_phash:
+            fams.append(_PHashFamily(cfg.phash_radius))
+        return fams
 
     # ------------------------------------------------------------ storage
     def _stage_dir(self, name: str) -> str:
@@ -499,34 +731,24 @@ class DedupPipeline:
             return self._read_stage(name)
         return self._write_stage(name, build(), partition_by=partition_by)
 
-    def _bucket_frame(self, kind: str, source: DataFrame,
-                      lshcfg: ml.LSHConfig | None = None,
+    def _bucket_frame(self, stage: str, rows: DataFrame, per_row: int,
                       append: bool = False) -> DataFrame:
         """The ONE definition of the bucket-index layout — full build,
         backfill and per-batch append all route here so they can never
-        diverge: band/block rows + kb partition column, repartition("kb")
-        so every write lands ≈1 file per touched kb partition (appends
-        included; maintain_warehouse handles long-horizon file accretion).
-        kind '*lsh_buckets' covers the caption family AND the media-token
-        families (same banding, per-family LSH config).
+        diverge: band/block ``rows`` (``per_row`` of them per index row)
+        + kb partition column, repartition("kb") so every write lands ≈1
+        file per touched kb partition (appends included; maintain_warehouse
+        handles long-horizon file accretion).
 
         The kb modulus follows the stage at rest for appends
         (append=True: batch rows must land in the partitions probes prune
         to); a fresh build derives it from the corpus size
         (derive_kb_partitions — 64 below ~128M bucket rows, scaling past
         that instead of the round-6 fixed constant)."""
-        if append and self.store.exists(kind):
-            kb_mod = ml.kb_modulus(self._read_stage(kind))
+        if append and self.store.exists(stage):
+            kb_mod = ml.kb_modulus(self._read_stage(stage))
         else:
-            if kind.endswith("lsh_buckets"):
-                per_row = (lshcfg or self.cfg.lsh).bands
-            else:
-                per_row = self.cfg.phash_radius + 1
             kb_mod = ml.derive_kb_partitions(self._fp_rows() * per_row)
-        if kind.endswith("lsh_buckets"):
-            rows = ml.band_buckets(source, lshcfg or self.cfg.lsh)
-        else:  # phash_blocks
-            rows = sh.sig_blocks(source, self.cfg.phash_radius)
         return ml.with_kb(rows, kb_mod).repartition("kb")
 
     def _fp_rows(self) -> int:
@@ -536,42 +758,6 @@ class DedupPipeline:
             return int(parts[1] if parts[0] == "inc" else parts[0])
         except (ValueError, IndexError):
             return 0
-
-    def _lsh_family(self, prefix: str, tokens: DataFrame,
-                    lshcfg: ml.LSHConfig, id_col: str) -> DataFrame:
-        """Build the three-stage LSH index family over an (id, caption)
-        token frame → the family's edge stage. prefix '' is the caption
-        engine (legacy stage names); 'video_'/'audio_' are the media
-        branches — identical machinery, identical resume/append contract.
-        """
-        def build_sigs():
-            # core-proportional repartition before the Arrow signature
-            # kernel (AQE coalesces the tiny collapse shuffle and the
-            # kernel would inherit ~4 tasks); eager checkpoint because
-            # grouped feeds both the kernel and the token join-back
-            par = tokens.sparkSession.sparkContext.defaultParallelism * 2
-            grouped = ml.collapse_groups(tokens, id_col).repartition(par) \
-                .localCheckpoint()
-            s = ml.signatures(grouped.select("rep_id", "caption"), lshcfg)
-            return s.join(grouped, "rep_id")  # + caption (star join key)
-
-        sigs = self._stage(f"{prefix}lsh_sigs", build_sigs)
-
-        buckets = self._stage(
-            f"{prefix}lsh_buckets",
-            lambda: self._bucket_frame(f"{prefix}lsh_buckets", sigs, lshcfg),
-            partition_by=["kb"])
-
-        def build_edges():
-            star = ml.star_edges(tokens, sigs.select("rep_id", "caption"),
-                                 id_col)
-            pairs, dropped = ml.candidate_pairs(buckets, lshcfg)
-            verified = ml.verify_pairs(pairs, sigs, lshcfg)
-            self.metrics.append({"stage": f"{prefix}lsh_dropped_buckets",
-                                 "rows": dropped.count(), "seconds": 0.0})
-            return star.unionByName(verified.select("a", "b"))
-
-        return self._stage(f"{prefix}lsh_edges", build_edges)
 
     def _signature_frame(self, images: DataFrame,
                          features: DataFrame | None = None) -> DataFrame:
@@ -616,7 +802,8 @@ class DedupPipeline:
             ).alias("h")).collect()[0]
         return f"{row['n']}:{row['h'] & 0xFFFFFFFFFFFFFFFF:016x}"
 
-    def _require_media(self, videos, audio,
+    @staticmethod
+    def _require_media(fams: list, media: dict,
                        require_when_enabled: bool = True) -> None:
         """Media-frame / flag consistency, BOTH directions: a flag without
         its frame can't build the branch, and a frame without its flag
@@ -624,23 +811,33 @@ class DedupPipeline:
         accounted-never-silent policy demands a loud refusal instead.
         run_incremental passes require_when_enabled=False: a batch with no
         new videos/audio is a legal append to a media-enabled warehouse."""
-        if require_when_enabled and self.cfg.use_video and videos is None:
-            raise ValueError("cfg.use_video=True needs a videos frame")
-        if require_when_enabled and self.cfg.use_audio and audio is None:
-            raise ValueError("cfg.use_audio=True needs an audio frame")
-        if videos is not None and not self.cfg.use_video:
-            raise ValueError(
-                "a videos frame was provided but cfg.use_video=False — "
-                "refusing to silently drop a modality")
-        if audio is not None and not self.cfg.use_audio:
-            raise ValueError(
-                "an audio frame was provided but cfg.use_audio=False — "
-                "refusing to silently drop a modality")
+        enabled = {f.source for f in fams}
+        for src, noun in _MEDIA.items():
+            if require_when_enabled and src in enabled and media[src] is None:
+                raise ValueError(f"cfg.use_{src}=True needs {noun}")
+            if media[src] is not None and src not in enabled:
+                raise ValueError(
+                    f"{noun} was provided but cfg.use_{src}=False — "
+                    "refusing to silently drop a modality")
+
+    @staticmethod
+    def _assignment_ids(fams: list, frames: dict) -> DataFrame:
+        """Ids the assignment covers: the image ids plus every enabled
+        media corpus's ids (including undecodable payloads — they cluster
+        as singletons rather than vanishing)."""
+        ids = frames["images"].select("image_id")
+        for f in fams:
+            if f.source in _MEDIA and frames[f.source] is not None:
+                ids = ids.unionByName(frames[f.source].select(
+                    F.col("media_id").alias("image_id")))
+        return ids
 
     # ------------------------------------------------------------- stages
     def run(self, images: DataFrame, videos: DataFrame | None = None,
             audio: DataFrame | None = None) -> DataFrame:
-        self._require_media(videos, audio)
+        fams = self._families()
+        media = {"video": videos, "audio": audio}
+        self._require_media(fams, media)
         # a full rebuild overwrites every stage; interleaving with a
         # compaction's rename-aside swaps would corrupt both
         if os.path.exists(os.path.join(self.cfg.warehouse, "_MAINT_PENDING")):
@@ -675,13 +872,13 @@ class DedupPipeline:
                     "run() refused: an incremental append started "
                     "concurrently (_INC_PENDING present)") from None
         try:
-            return self._run_locked(images, videos, audio)
+            return self._run_locked(fams, images, media)
         finally:
             if _held and os.path.exists(self._pending()):
                 os.remove(self._pending())
 
-    def _run_locked(self, images: DataFrame, videos: DataFrame | None,
-                    audio: DataFrame | None) -> DataFrame:
+    def _run_locked(self, fams: list, images: DataFrame,
+                    media: dict) -> DataFrame:
         # input identity for resume safety: row count + order-independent
         # xor of row-content hashes. Content columns (caption, phash, byte
         # LENGTH) are folded in so a rerun against same-ids-different-rows
@@ -706,10 +903,10 @@ class DedupPipeline:
             F.coalesce(F.expr(fp_expr), F.lit(0)).alias("h"),
         ).collect()[0]
         self._input_fp = f"{fp_row['n']}:{fp_row['h'] & 0xFFFFFFFFFFFFFFFF:016x}"
-        if self.cfg.use_video:
-            self._input_fp += f":v{self._media_fp(videos)}"
-        if self.cfg.use_audio:
-            self._input_fp += f":a{self._media_fp(audio)}"
+        for f in fams:
+            if f.source in _MEDIA:  # ":v<fp>" / ":a<fp>"
+                self._input_fp += \
+                    f":{f.source[0]}{self._media_fp(media[f.source])}"
 
         if self.cfg.fast:
             sigs = self._stage(
@@ -725,96 +922,13 @@ class DedupPipeline:
                 "signatures", lambda: self._signature_frame(images, features)
             )
 
-        edge_frames: list[DataFrame] = []
-
-        exact_edges = self._stage(
-            "exact_edges",
-            lambda: exact.dup_edges(sigs.select("image_id", "sha256")),
-        )
-        edge_frames.append(exact_edges)
-
-        if self.cfg.use_captions:
-            # the caption near-dup INDEX (one rep per distinct caption +
-            # its minhash signature/bands, plus the kb-partitioned
-            # band-bucket stage) is a stage family of its own so
-            # run_incremental can probe and append to it without ever
-            # re-signaturing the corpus
-            edge_frames.append(self._lsh_family(
-                "", sigs.select("image_id", "caption"), self.cfg.lsh,
-                "image_id"))
-
-        # media branches: decode → persisted token stage → the SAME LSH
-        # family as captions (own prefix, media_lsh config). The decode is
-        # the expensive part, so the token table is a stage of its own —
-        # resumes and appends never re-decode the corpus.
-        if self.cfg.use_video:
-            from dupers_spark.operators import video as vo
-
-            vtok = self._stage(
-                "video_tokens",
-                lambda: vo.video_token_table(videos, self.cfg.video_every_n))
-            edge_frames.append(self._lsh_family(
-                "video_", vtok, self.cfg.media_lsh, "media_id"))
-        if self.cfg.use_audio:
-            from dupers_spark.operators import audio as ao
-
-            atok = self._stage(
-                "audio_tokens",
-                lambda: ao.audio_token_table(audio, self.cfg.audio_win,
-                                             self.cfg.audio_bands))
-            edge_frames.append(self._lsh_family(
-                "audio_", atok, self.cfg.media_lsh, "media_id"))
-
-        if self.cfg.use_phash:
-            pimg = sigs.select("image_id", "phash").filter(
-                F.col("phash").isNotNull())
-
-            # perceptual index stage: one rep per distinct 64-bit sig
-            phash_reps = self._stage(
-                "phash_reps",
-                lambda: sh.collapse_sig_groups(pimg).select("rep_id", "sig"),
-            )
-
-            # pigeonhole block index at rest (lsh_buckets analogue; carries
-            # sig so the Hamming-refinement kernel works on the probe path)
-            phash_blocks = self._stage(
-                "phash_blocks",
-                lambda: self._bucket_frame("phash_blocks", phash_reps),
-                partition_by=["kb"])
-
-            def build_phash():
-                star = (
-                    pimg.select(F.col("image_id").alias("member"),
-                                F.col("phash").alias("sig"))
-                    .join(phash_reps, "sig")
-                    .filter(F.col("member") != F.col("rep_id"))
-                    .select(F.col("member").alias("a"),
-                            F.col("rep_id").alias("b"))
-                )
-                cands, dropped = sh.hamming_candidates(
-                    phash_reps, self.cfg.phash_radius, blocks=phash_blocks)
-                verified = sh.verify_hamming(cands, phash_reps,
-                                             self.cfg.phash_radius)
-                self.metrics.append({"stage": "phash_dropped_buckets",
-                                     "rows": dropped.count(), "seconds": 0.0})
-                return star.unionByName(verified.select("a", "b"))
-
-            edge_frames.append(self._stage("phash_edges", build_phash))
-
-        all_edges = edge_frames[0]
-        for e in edge_frames[1:]:
-            all_edges = all_edges.unionByName(e)
-
-        # total assignment covers every modality: image ids + the media
-        # corpora's ids (including undecodable payloads — they cluster as
-        # singletons rather than vanishing)
-        all_ids = sigs.select("image_id")
-        if self.cfg.use_video:
-            all_ids = all_ids.unionByName(
-                videos.select(F.col("media_id").alias("image_id")))
-        if self.cfg.use_audio:
-            all_ids = all_ids.unionByName(
-                audio.select(F.col("media_id").alias("image_id")))
+        # every family's stages depend only on the signature stage or its
+        # own media corpus: the families build as concurrent branches
+        frames = {"images": sigs, **media}
+        edges = run_branches(self.spark, {
+            f.key: (lambda f=f: f.build(self, frames[f.source]))
+            for f in fams})
+        all_edges = reduce(DataFrame.unionByName, edges.values())
 
         # cb-partitioned (identity-partition layout): appends leave this
         # BASE untouched and land in components_delta/_relabel instead;
@@ -825,7 +939,8 @@ class DedupPipeline:
         comps = self._stage(
             "components",
             lambda: with_cb(with_singletons(
-                connected_components(all_edges), all_ids
+                connected_components(all_edges),
+                self._assignment_ids(fams, frames)
             ), cb_mod),
             partition_by=["cb"],
         )
@@ -841,7 +956,7 @@ class DedupPipeline:
             from dupers_spark.operators import multimodal as mm
 
             def build_invariants():
-                sampled = exact_edges.sample(self.cfg.psnr_sample, seed=42)
+                sampled = edges["exact"].sample(self.cfg.psnr_sample, seed=42)
                 scored = mm.pair_psnr(sampled, images)
                 caps = images.select("image_id", "caption")
                 cap_pairs = (
@@ -881,15 +996,15 @@ class DedupPipeline:
           * exact: within-batch star edges + batch digests broadcast-probed
             against the signatures stage (scan + broadcast semi-join, no
             corpus shuffle)
-          * captions / phash: the operators' incremental probes against
-            the persisted ``lsh_buckets`` / ``phash_blocks`` BUCKET stages
-            (skinny precomputed band/block rows, kb-partition-pruned — the
-            signature stages are never re-exploded per batch); new reps
-            append to sigs/reps AND bucket stages alike. A batch caption
-            (or sig) identical to an indexed one adds a second rep for
-            that key — the verified sim-1.0 / dist-0 edge keeps the
-            cluster correct, and the index grows with batches, not with
-            the corpus.
+          * captions / media / phash: the operators' incremental probes
+            against the persisted ``*lsh_buckets`` / ``phash_blocks``
+            BUCKET stages (skinny precomputed band/block rows,
+            kb-partition-pruned — the signature stages are never
+            re-exploded per batch); new reps append to sigs/reps AND
+            bucket stages alike. A batch caption (or sig) identical to an
+            indexed one adds a second rep for that key — the verified
+            sim-1.0 / dist-0 edge keeps the cluster correct, and the index
+            grows with batches, not with the corpus.
           * components: contracted-graph recluster
             (components.incremental_components_delta) — touched old
             components collapse to their labels, CC runs over the O(batch)
@@ -912,22 +1027,22 @@ class DedupPipeline:
             half-appended stages even though markers still match the
             pre-batch input). Markers refresh LAST, inside the window.
         """
-        self._require_media(new_videos, new_audio,
-                            require_when_enabled=False)
-        needed = ["signatures", "exact_edges", "components"]
-        if self.cfg.use_captions:
-            needed += ["lsh_sigs", "lsh_edges"]
-        if self.cfg.use_phash:
-            needed += ["phash_reps", "phash_edges"]
-        if self.cfg.use_video:
-            needed += ["video_tokens", "video_lsh_sigs", "video_lsh_edges",
-                       "video_lsh_buckets"]
-        if self.cfg.use_audio:
-            needed += ["audio_tokens", "audio_lsh_sigs", "audio_lsh_edges",
-                       "audio_lsh_buckets"]
+        fams = self._families()
+        media = {"video": new_videos, "audio": new_audio}
+        self._require_media(fams, media, require_when_enabled=False)
+        needed = ["signatures", "components"] + \
+            [s for f in fams for s, _ in f.stages]
+        # bucket/block index stages are the probe targets for every append;
+        # a warehouse written before they existed is backfilled once from
+        # the signature/rep stages (atomic stage write), then appended to.
+        backfill = [f for f in fams
+                    if f.buckets and not self.store.exists(f.buckets)]
         optional = [s for s in ("components_delta", "components_relabel")
                     if self.store.exists(s)]
+        skip = {f.buckets for f in backfill}
         for name in needed + optional:
+            if name in skip:
+                continue
             if not self.store.exists(name):
                 raise ValueError(
                     f"run_incremental needs completed stage {name!r}")
@@ -936,24 +1051,10 @@ class DedupPipeline:
             if cfg_of != self.cfg.config_hash():
                 raise ValueError(
                     f"stage {name!r} was built with a different config")
-
-        # bucket/block index stages are the probe targets for every append;
-        # a warehouse written before they existed is backfilled once from
-        # the signature/rep stages (atomic stage write), then appended to.
-        if self.cfg.use_captions and not self.store.exists("lsh_buckets"):
+        for f in backfill:
             self._write_stage(
-                "lsh_buckets",
-                self._bucket_frame("lsh_buckets", self._read_stage("lsh_sigs")),
+                f.buckets, f.bucket_rows(self, self._read_stage(f.index)),
                 partition_by=["kb"])
-        if self.cfg.use_phash and not self.store.exists("phash_blocks"):
-            self._write_stage(
-                "phash_blocks",
-                self._bucket_frame("phash_blocks", self._read_stage("phash_reps")),
-                partition_by=["kb"])
-        if self.cfg.use_captions:
-            needed.append("lsh_buckets")
-        if self.cfg.use_phash:
-            needed.append("phash_blocks")
 
         # the assignment must be cb-partitioned for O(touched) relabel
         # writes; a warehouse written before partitioning existed is
@@ -1023,142 +1124,26 @@ class DedupPipeline:
             bsigs = self._signature_frame(new_images).localCheckpoint()
             n_batch_rows = bsigs.count()
             metric("inc_signatures", n_batch_rows, t0)
-            old_sigs = self._read_stage("signatures")
+            batch = {"images": bsigs, **media}
 
-            # ---- the probe branches (exact / captions / media / phash)
-            # are independent DAG branches, each ending in an eager
-            # checkpoint — run them from a small thread pool so one
-            # branch's shuffle barrier overlaps another's compute (the
-            # documented multi-job submission pattern, same as
-            # plans/dedup_job.py; measured: the serial formulation left
-            # most of a 22 s 4k-row append latency-bound on barriers)
-            def exact_branch():
+            # each probe ends in an eager checkpoint, so the append window
+            # below only writes materialized frames
+            def probe(fam):
                 t0 = time.time()
-                b_ex = bsigs.select("image_id", "sha256")
-                matched_old = old_sigs.select("image_id", "sha256").join(
-                    F.broadcast(b_ex.select("sha256").distinct()), "sha256",
-                    "leftsemi")
-                old_ex = matched_old.groupBy("sha256").agg(
-                    F.min("image_id").alias("exemplar"))
-                cross = b_ex.join(F.broadcast(old_ex), "sha256").select(
-                    F.col("image_id").alias("a"),
-                    F.col("exemplar").alias("b"))
-                exact_inc = exact.dup_edges(b_ex).unionByName(cross) \
-                    .localCheckpoint()
-                n_ex = exact_inc.count()
-                metric("inc_exact_edges", n_ex, t0)
-                return exact_inc, n_ex
+                edges, rows, dropped = fam.probe(self, batch[fam.source])
+                edges = edges.localCheckpoint()
+                n = edges.count()
+                if dropped is not None:
+                    self.metrics.append(
+                        {"stage": f"inc_{fam.key}_dropped_buckets",
+                         "rows": dropped.count(), "seconds": 0.0})
+                metric(f"inc_{fam.key}_edges", n, t0)
+                return {**rows, fam.edges: edges}, n
 
-            def lsh_branch():
-                t0 = time.time()
-                lsh_sigs = self._read_stage("lsh_sigs")
-                caps_new = bsigs.select("image_id", "caption")
-                # probe the PERSISTED band-bucket stage (kb-pruned skinny
-                # scan) — the signature stage is only touched for verify
-                # participants
-                lsh_inc, _ver, dropped, sigs_new = \
-                    ml.incremental_near_dup_edges(
-                        lsh_sigs.select("rep_id", "shingles", "bands"),
-                        caps_new, self.cfg.lsh,
-                        index_buckets=self._read_stage("lsh_buckets"))
-                lsh_inc = lsh_inc.localCheckpoint()
-                # sigs_new is checkpointed and carries caption — the
-                # append rows are pure projections, no extra jobs
-                lsh_sig_rows = sigs_new.select(*lsh_sigs.columns)
-                lsh_bucket_rows = self._bucket_frame("lsh_buckets", sigs_new,
-                                                    append=True)
-                n_lsh = lsh_inc.count()
-                self.metrics.append({"stage": "inc_lsh_dropped_buckets",
-                                     "rows": dropped.count(),
-                                     "seconds": 0.0})
-                metric("inc_lsh_edges", n_lsh, t0)
-                return lsh_inc, lsh_sig_rows, lsh_bucket_rows, n_lsh
-
-            def media_branch(prefix: str, batch_tokens: DataFrame):
-                t0m = time.time()
-                # decode/checkpoint INSIDE the branch thread so the token
-                # decode overlaps the other branches instead of serializing
-                # at submit time
-                batch_tokens = batch_tokens.localCheckpoint()
-                fam_sigs = self._read_stage(f"{prefix}lsh_sigs")
-                m_inc, _mv, m_drop, m_sigs_new = \
-                    ml.incremental_near_dup_edges(
-                        fam_sigs.select("rep_id", "shingles", "bands"),
-                        batch_tokens, self.cfg.media_lsh, id_col="media_id",
-                        index_buckets=self._read_stage(
-                            f"{prefix}lsh_buckets"))
-                m_inc = m_inc.localCheckpoint()
-                sig_rows = m_sigs_new.select(*fam_sigs.columns)
-                bucket_rows = self._bucket_frame(
-                    f"{prefix}lsh_buckets", m_sigs_new, self.cfg.media_lsh,
-                    append=True)
-                n_m = m_inc.count()
-                self.metrics.append(
-                    {"stage": f"inc_{prefix}lsh_dropped_buckets",
-                     "rows": m_drop.count(), "seconds": 0.0})
-                metric(f"inc_{prefix}lsh_edges", n_m, t0m)
-                return prefix, batch_tokens, sig_rows, bucket_rows, m_inc, n_m
-
-            def phash_branch():
-                t0 = time.time()
-                reps_stage = self._read_stage("phash_reps")
-                pimg_new = bsigs.select("image_id", "phash").filter(
-                    F.col("phash").isNotNull())
-                ph_inc, _ver, dropped_p, reps_new = \
-                    sh.incremental_hamming_edges(
-                        reps_stage, pimg_new, self.cfg.phash_radius,
-                        index_blocks=self._read_stage("phash_blocks"))
-                ph_inc = ph_inc.localCheckpoint()
-                # reps_new is a projection of the probe's checkpointed
-                # collapse frame — append rows need no extra jobs
-                ph_rep_rows = reps_new.select("rep_id", "sig")
-                ph_block_rows = self._bucket_frame("phash_blocks", reps_new,
-                                                  append=True)
-                n_ph = ph_inc.count()
-                self.metrics.append({"stage": "inc_phash_dropped_buckets",
-                                     "rows": dropped_p.count(),
-                                     "seconds": 0.0})
-                metric("inc_phash_edges", n_ph, t0)
-                return ph_inc, ph_rep_rows, ph_block_rows, n_ph
-
-            from concurrent.futures import ThreadPoolExecutor
-
-            futs: dict = {}
-            with ThreadPoolExecutor(5) as pool:
-                futs["exact"] = pool.submit(exact_branch)
-                if self.cfg.use_captions:
-                    futs["lsh"] = pool.submit(lsh_branch)
-                if self.cfg.use_video and new_videos is not None:
-                    from dupers_spark.operators import video as vo
-
-                    futs["video"] = pool.submit(
-                        media_branch, "video_", vo.video_token_table(
-                            new_videos, self.cfg.video_every_n))
-                if self.cfg.use_audio and new_audio is not None:
-                    from dupers_spark.operators import audio as ao
-
-                    futs["audio"] = pool.submit(
-                        media_branch, "audio_", ao.audio_token_table(
-                            new_audio, self.cfg.audio_win,
-                            self.cfg.audio_bands))
-                if self.cfg.use_phash:
-                    futs["phash"] = pool.submit(phash_branch)
-                results = {k: f.result() for k, f in futs.items()}
-
-            new_edge_frames: list[DataFrame] = []
-            exact_inc, n_ex = results["exact"]
-            new_edge_frames.append(exact_inc)
-            if self.cfg.use_captions:
-                lsh_inc, lsh_sig_rows, lsh_bucket_rows, n_lsh = \
-                    results["lsh"]
-                new_edge_frames.append(lsh_inc)
-            media_appends = [results[k] for k in ("video", "audio")
-                             if k in results]
-            for rec in media_appends:
-                new_edge_frames.append(rec[4])
-            if self.cfg.use_phash:
-                ph_inc, ph_rep_rows, ph_block_rows, n_ph = results["phash"]
-                new_edge_frames.append(ph_inc)
+            # a media family probes only when the batch carries its corpus
+            probed = [f for f in fams if batch[f.source] is not None]
+            results = run_branches(self.spark, {
+                f.key: (lambda f=f: probe(f)) for f in probed})
 
             # recluster via the CONTRACTED graph (components.py): old
             # components touched by the batch collapse to their labels, CC
@@ -1173,19 +1158,11 @@ class DedupPipeline:
             # apply_relabel(base ∪ delta, log); maintain_warehouse folds.
             t0 = time.time()
             old_assign = self._effective_components()
-            new_edges_all = new_edge_frames[0]
-            for e in new_edge_frames[1:]:
-                new_edges_all = new_edges_all.unionByName(e)
-            batch_ids = bsigs.select("image_id")
-            if self.cfg.use_video and new_videos is not None:
-                batch_ids = batch_ids.unionByName(
-                    new_videos.select(F.col("media_id").alias("image_id")))
-            if self.cfg.use_audio and new_audio is not None:
-                batch_ids = batch_ids.unionByName(
-                    new_audio.select(F.col("media_id").alias("image_id")))
+            new_edges_all = reduce(DataFrame.unionByName, [
+                results[f.key][0][f.edges] for f in probed])
             relabel, new_assign = incremental_components_delta(
                 old_assign.select("image_id", "component_id"),
-                new_edges_all, batch_ids)
+                new_edges_all, self._assignment_ids(fams, batch))
             # delta rows use the BASE stage's modulus (column metadata) so
             # the fold unions one consistent layout
             new_assign = with_cb(
@@ -1216,48 +1193,20 @@ class DedupPipeline:
         # ------------- append window: pre-materialized frames only; a
         # crash from here on leaves the sentinel in place (markers stale,
         # rebuild required). Every append derives solely from checkpoints
-        # and targets its OWN stage directory, so the ~9 small write jobs
-        # are independent — submitted from a thread pool they overlap
-        # (measured serial: 3.8 s of a 22 s 4k-row append was this window's
-        # back-to-back write barriers). Crash semantics are unchanged: any
-        # failure leaves the sentinel in place.
+        # and targets its OWN stage directory, so the small write jobs are
+        # independent branches (measured serial: 3.8 s of a 22 s 4k-row
+        # append was this window's back-to-back write barriers).
         t0 = time.time()
-        writes: list[tuple] = [("exact_edges", exact_inc, None)]
-        if self.cfg.use_captions:
-            writes += [("lsh_sigs", lsh_sig_rows, None),
-                       ("lsh_buckets", lsh_bucket_rows, ["kb"]),
-                       ("lsh_edges", lsh_inc, None)]
-        if self.cfg.use_phash:
-            writes += [("phash_reps", ph_rep_rows, None),
-                       ("phash_blocks", ph_block_rows, ["kb"]),
-                       ("phash_edges", ph_inc, None)]
-        for prefix, tok_rows, sig_rows, bucket_rows, m_inc, n_m \
-                in media_appends:
-            writes += [(f"{prefix}tokens", tok_rows, None),
-                       (f"{prefix}lsh_sigs", sig_rows, None),
-                       (f"{prefix}lsh_buckets", bucket_rows, ["kb"]),
-                       (f"{prefix}lsh_edges", m_inc, None)]
-        writes.append(("signatures", bsigs, None))
-        with ThreadPoolExecutor(4) as pool:
-            wfuts = [pool.submit(self.store.append, name, df,
-                                 partition_by=pb)
-                     for name, df, pb in writes]
-            for f in wfuts:
-                f.result()
-        lineage_append("exact_edges", n_ex)
-        if self.cfg.use_captions:
-            for st in ("lsh_sigs", "lsh_buckets"):
-                lineage_append(st)
-            lineage_append("lsh_edges", n_lsh)
-        if self.cfg.use_phash:
-            for st in ("phash_reps", "phash_blocks"):
-                lineage_append(st)
-            lineage_append("phash_edges", n_ph)
-        for prefix, _t, _s, _b, _m, n_m in media_appends:
-            for st in (f"{prefix}tokens", f"{prefix}lsh_sigs",
-                       f"{prefix}lsh_buckets"):
-                lineage_append(st)
-            lineage_append(f"{prefix}lsh_edges", n_m)
+        writes = {s: (results[f.key][0][s], pb)
+                  for f in probed for s, pb in f.stages}
+        writes["signatures"] = (bsigs, None)
+        run_branches(self.spark, {
+            s: (lambda s=s, df=df, pb=pb:
+                self.store.append(s, df, partition_by=pb))
+            for s, (df, pb) in writes.items()})
+        for f in probed:
+            for s, _ in f.stages:
+                lineage_append(s, results[f.key][1] if s == f.edges else -1)
         lineage_append("signatures")
         metric("inc_append_window", -1, t0)
 

@@ -210,11 +210,6 @@ def truth_caption_components(n: int) -> dict[str, int]:
     return comp
 
 
-def write_images(spark: SparkSession, n: int, path: str) -> None:
-    """Materialize as parquet partitioned by bucket (Iceberg-style layout)."""
-    make_images(spark, n).write.mode("overwrite").partitionBy("bucket").parquet(path)
-
-
 def zero_byte_ids(n: int) -> list[str]:
     return [_image_id(7)] if n > 7 else []
 
@@ -484,11 +479,3 @@ def make_audio(spark: SparkSession, n: int, n_windows: int = 16,
 
     return spark.range(0, n, 1, partitions).mapInPandas(
         gen, schema=AUDIO_SCHEMA)
-
-
-def truth_audio_clusters(n: int) -> int:
-    """Expected cluster count for make_audio(n), n % 10 == 0: one
-    {r0, r1, r2} cluster + 7 singletons per group."""
-    if n % 10:
-        raise ValueError("closed-form truth needs n divisible by 10")
-    return (n // 10) * 8

@@ -291,27 +291,6 @@ def windowed_event_counts(
     )
 
 
-def stream_event_counts(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    schema: str = "event_id long, ts timestamp, user_id long, "
-                  "event_type string, value double, props string",
-) -> StreamingQuery:
-    """File-source events stream → windowed counts, append mode."""
-    stream = spark.readStream.schema(schema).parquet(input_dir)
-    agg = windowed_event_counts(stream)
-    return (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def stream_first_seen(
     sigs: DataFrame,
     id_col: str = "image_id",

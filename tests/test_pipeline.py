@@ -172,13 +172,40 @@ def test_compact_preserves_partition_layout(spark, tmp_path):
     assert out.count() == 4000 and "kb" in out.columns
 
 
-def test_run_incremental_matches_full_rebuild(spark, images):
+def _make_legacy(spark, wh, legacy):
+    """Rewind a freshly built warehouse to a layout written before the
+    bucket index stages (no_bucket_stages) or before the cb-partitioned
+    assignment (components_without_cb), markers kept."""
+    import shutil
+
+    from dupers_spark.sources.storage import StageStore
+
+    if legacy == "no_bucket_stages":
+        for stage in ("lsh_buckets", "phash_blocks"):
+            shutil.rmtree(os.path.join(wh, stage))
+    elif legacy == "components_without_cb":
+        marker = os.path.join(wh, "components", "_CONFIG_HASH")
+        with open(marker) as fh:
+            value = fh.read()
+        store = StageStore(spark, wh)
+        store.write("components", store.read("components")
+                    .select("image_id", "component_id"))
+        with open(marker, "w") as fh:
+            fh.write(value)
+        assert "cb" not in store.read("components").columns
+
+
+@pytest.mark.parametrize(
+    "legacy", ["current", "no_bucket_stages", "components_without_cb"])
+def test_run_incremental_matches_full_rebuild(spark, images, legacy):
     """Pipeline-level append (`dupers up` on new files only): full run over
     the even half, run_incremental with the odd half — the final
     components must equal a full rebuild over everything (exact copies,
     caption chains, the flood and phash near-dups all straddle the parity
     split), the index/edge stages must be appended rather than rebuilt,
-    and a config mismatch must refuse."""
+    and a config mismatch must refuse. The legacy cases start the append
+    from an older warehouse layout, which run_incremental migrates first
+    (bucket stages backfilled, assignment rewritten cb-partitioned)."""
     import pytest
 
     parity = F.substring("image_id", -1, 1).cast("int") % 2
@@ -187,6 +214,7 @@ def test_run_incremental_matches_full_rebuild(spark, images):
     with tempfile.TemporaryDirectory() as td:
         cfg = PipelineConfig(warehouse=os.path.join(td, "wh"))
         DedupPipeline(spark, cfg).run(old)
+        _make_legacy(spark, os.path.join(td, "wh"), legacy)
         p2 = DedupPipeline(spark, cfg)
         comps_inc = p2.run_incremental(new)
         got = {(r["image_id"], r["component_id"])
@@ -201,6 +229,9 @@ def test_run_incremental_matches_full_rebuild(spark, images):
         want = {(r["image_id"], r["component_id"])
                 for r in comps_full.collect()}
         assert got == want
+        # the base assignment is cb-partitioned (legacy layouts migrated)
+        assert "cb" in spark.read.parquet(
+            os.path.join(td, "wh", "components")).columns
 
         # appended, not rebuilt: signatures stage now covers the whole set
         assert spark.read.parquet(
@@ -226,6 +257,30 @@ def test_run_incremental_matches_full_rebuild(spark, images):
             warehouse=os.path.join(td, "wh"), phash_radius=4))
         with pytest.raises(ValueError):
             bad.run_incremental(new)
+
+
+@pytest.mark.parametrize("normal", [False, True], ids=["fast", "normal"])
+def test_dedup_edges_concurrent_matches_pipeline(spark, images, normal):
+    """The in-memory edge build (plans/dedup_job.py, what bench.py times)
+    clusters exactly like the production DedupPipeline, in -fast and in
+    normal mode."""
+    from dupers_spark.operators.components import (
+        connected_components,
+        with_singletons,
+    )
+    from dupers_spark.plans.dedup_job import dedup_edges_concurrent
+
+    bench = with_singletons(
+        connected_components(dedup_edges_concurrent(
+            images, recompute_phash=normal)),
+        images.select("image_id"))
+    with tempfile.TemporaryDirectory() as td:
+        prod = DedupPipeline(spark, PipelineConfig(
+            warehouse=os.path.join(td, "wh"), fast=not normal)).run(images)
+        want = {(r["image_id"], r["component_id"]) for r in prod.collect()}
+    got = {(r["image_id"], r["component_id"]) for r in bench.collect()}
+    assert got == want
+    assert len({c for _, c in got}) == _expected_cluster_count(N)
 
 
 def test_incremental_components_append_writes_o_batch_bytes(spark):
